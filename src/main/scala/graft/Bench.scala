@@ -147,39 +147,7 @@ object Bench {
       Thread.sleep(15000)
       preload = loadAvg()
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // round-18 (guide §2: partitioning must adapt to data volume, not the
-      // core count): let AQE coalesce shuffle partitions INSIDE cached-plan
-      // materialization too. Off (the default) every `persist()`ed lineage
-      // compiles without partition coalescing, so droplet-sized cached
-      // frames materialize at full shuffle.partitions width and every
-      // downstream stage inherits that width — measured as ~200-400 ms of
-      // pure task-launch overhead per 32-task stage over ~1 ms of work in
-      // the persist-bearing composites (cdc_snapshot_tail et al.), and the
-      // 32-core anti-scaling family in PERF_r17's scaling block. Safe for
-      // results: the only partition-sensitive operators (GlobalOrder's
-      // spark_partition_id over repartitionByRange; MetricsAgg's local
-      // pre-prune) are invariant under AQE's adjacent-range coalescing.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // round-18 companion to the cached-plan setting above: AQE's
-      // parallelismFirst coalescing targets minPartitionSize (default 1m),
-      // which under-parallelizes CPU-DENSE small-byte stages — measured at
-      // the 10x slice: dedup_verify_capped's candidate-intersect stage
-      // coalesced to 1 task (6.1 s) under the cached-plan setting where the
-      // uncached shape ran 32 tasks (2.2 s wall); 64k restores the width
-      // (16 tasks, 2.0 s) while droplet-sized caches (<<64k) still collapse
-      // to 1 partition, keeping the anti-scaling fix. Byte-based and
-      // core-count-independent; env-overridable for cluster tuning where
-      // per-row cost is lighter.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART_SIZE", "64k"))
-      .config("spark.sql.codegen.fallback", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.create(cpus.toInt, "graft-bench")
     spark.sparkContext.setLogLevel("WARN")
 
     // Force FULL evaluation of every output column: a bare count() lets

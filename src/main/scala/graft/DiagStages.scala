@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.GraftBridge
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -10,6 +10,9 @@ import scala.collection.mutable.ArrayBuffer
   * for attributing composite-query cost to scheduling overhead vs work
   * (guide §1/§7). Not part of the driver contract; not used by Bench/Verify.
   * Usage: runMain graft.DiagStages <sfDir> <cpus> <query> [reps]
+  * Runs the [[GraftSession]] config; `DIAG_CACHED_AQE`, `DIAG_MIN_PART_SIZE`
+  * and `DIAG_PREFER_SMJ`, when set, override its cached-plan coalescing,
+  * coalescing floor and sort-merge-join preference for A/B runs.
   */
 object DiagStages {
   def main(args: Array[String]): Unit = {
@@ -17,24 +20,17 @@ object DiagStages {
     val cpus = args(1)
     val reps = if (args.length > 3) args(3).toInt else 2
     val name = args(2)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("DIAG_CACHED_AQE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("DIAG_MIN_PART_SIZE", "1m"))
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("DIAG_PREFER_SMJ", "true"))
-      .config("spark.sql.codegen.fallback", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val overrides = Seq(
+      "DIAG_CACHED_AQE" -> "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+      "DIAG_MIN_PART_SIZE" -> "spark.sql.adaptive.coalescePartitions.minPartitionSize",
+      "DIAG_PREFER_SMJ" -> "spark.sql.join.preferSortMergeJoin")
+      .flatMap { case (env, key) => sys.env.get(env).map(key -> _) }
+    val spark = GraftSession.create(cpus.toInt, "graft-diag-stages", overrides)
     spark.sparkContext.setLogLevel("WARN")
 
     case class St(id: Int, name: String, tasks: Int, ms: Long, runMs: Long,
         cpuMs: Long, gcMs: Long)
+    // appended on the listener-bus thread, read and cleared on this one
     val stages = ArrayBuffer[St]()
     var jobs = 0
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -42,25 +38,34 @@ object DiagStages {
         val si = sc.stageInfo
         val ms = (for {a <- si.completionTime; b <- si.submissionTime} yield a - b).getOrElse(-1L)
         val tm = si.taskMetrics
-        stages += St(si.stageId, si.name.takeWhile(_ != '\n').take(90), si.numTasks, ms,
-          tm.executorRunTime, tm.executorCpuTime / 1000000L, tm.jvmGCTime)
+        stages.synchronized {
+          stages += St(si.stageId, si.name.takeWhile(_ != '\n').take(90), si.numTasks, ms,
+            tm.executorRunTime, tm.executorCpuTime / 1000000L, tm.jvmGCTime)
+        }
       }
-      override def onJobStart(js: SparkListenerJobStart): Unit = { jobs += 1 }
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        stages.synchronized { jobs += 1 }
     })
 
-    def exec(): Unit =
+    // every event of the execution delivered before the buffer is read
+    // or cleared, so no rep's stages bleed into the next one's table
+    def exec(): Unit = {
       SparkEntry.queries(name)(spark, sfDir)
         .write.mode("overwrite").format("noop").save()
+      GraftBridge.drainListenerBus(spark.sparkContext)
+    }
 
     for (r <- 1 to reps) {
       spark.catalog.clearCache()
-      stages.clear(); jobs = 0
+      GraftBridge.drainListenerBus(spark.sparkContext)
+      stages.synchronized { stages.clear(); jobs = 0 }
       val t0 = System.nanoTime()
       exec()
       val wall = (System.nanoTime() - t0) / 1e9
-      println(f"== $name rep $r: wall $wall%.2f s, $jobs jobs, ${stages.size} stages")
+      val (seen, nJobs) = stages.synchronized { (stages.toList, jobs) }
+      println(f"== $name rep $r: wall $wall%.2f s, $nJobs jobs, ${seen.size} stages")
       if (r == reps) {
-        for (s <- stages.sortBy(-_.ms))
+        for (s <- seen.sortBy(-_.ms))
           println(f"  stage ${s.id}%4d ${s.ms}%6d ms tasks=${s.tasks}%4d run=${s.runMs}%6d cpu=${s.cpuMs}%6d gc=${s.gcMs}%5d  ${s.name}")
       }
     }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.llm.{Corpus, Dedup}
@@ -40,13 +40,7 @@ object IncrGrowthProbe {
     val sfDir = if (args.nonEmpty) args(0) else "/tmp/sfr10"
     val outPath = if (args.length > 1) args(1) else "/tmp/incr_growth.json"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.fallback", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.create(cpus.toInt, "graft-incr-growth")
     spark.sparkContext.setLogLevel("WARN")
     def exec(df: DataFrame): Unit =
       df.write.mode("overwrite").format("noop").save()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit main: prints `explain("formatted")` for representative queries
   * so shuffle shape, pushed filters, read schemas, and broadcast choices can
   * be reviewed (and re-reviewed after changes). Usage:
@@ -28,15 +26,9 @@ object Plans {
         // the bench's heaviest composites + the round-5 join operators
         "cdc_debezium_e2e", "cdc_snapshot_tail", "q_events_asof",
         "q_events_window_pairs", "q_events_salted_join")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // match the Bench/Verify execution config (round-18) so dumped plans
-      // show the cached-plan shape the bench actually runs
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the bench session (GraftSession), so dumped plans show the shape the
+    // bench runs
+    val spark = GraftSession.create(4, "graft-plans")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       println(s"\n========== $name ==========")

@@ -69,9 +69,19 @@ object Canonical {
   }
 
   /** Deterministic JSON of selected columns — field order fixed by sorting
-    * names (`stableStringify`'s sorted keys). */
-  def stableJson(df: DataFrame, cols: Seq[String]): Column =
-    to_json(struct(cols.sorted.map(n => coerceComparable(col(n)).as(n)): _*))
+    * names (`stableStringify`'s sorted keys), null fields omitted. Built as
+    * a name → canonical-value map rather than a struct so that
+    * [[coerceComparable]] appears once, inside `transform`, instead of once
+    * per column: inlined per column, its generated code passes the JVM's
+    * 64 KB method limit at about ten columns, which fails the query under
+    * strict codegen (`codegen.fallback=false`). Same JSON text as the
+    * struct form. */
+  def stableJson(df: DataFrame, cols: Seq[String]): Column = {
+    val names = cols.sorted
+    val canon = transform(array(names.map(n => col(n).cast("string")): _*), coerceComparable(_))
+    to_json(map_filter(map_from_arrays(array(names.map(lit): _*), canon),
+      (_, v) => v.isNotNull))
+  }
 
   /** Stable row hash over the canonical JSON (drives state-diff equality and
     * the golden-state oracle check). */

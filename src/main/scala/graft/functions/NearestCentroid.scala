@@ -209,13 +209,13 @@ case class NearestCentroid(emb: Expression, nrm: Expression, cands: Expression)
   * same order (the `pqEncode` reconstructed-norm sum).
   *
   * COVERAGE CONTRACT (round-18, review finding): the codebook must carry
-  * exactly the s-groups 0..m-1 — consumers key codes POSITIONALLY
-  * (`element_at(codes, s+1)`, the LUT fold), so an absent or out-of-range
-  * s-group would silently shift every later code into the wrong subspace.
-  * Both evaluation paths therefore REQUIRE s < m and exactly m groups and
-  * throw identically on a malformed codebook (they previously diverged:
-  * interpreted appended unboundedly, codegen silently capped at m). Any
-  * codebook trained on a non-empty corpus satisfies the contract.
+  * exactly the s-groups 0..m-1 IN ASCENDING ORDER — consumers key codes
+  * POSITIONALLY (`element_at(codes, s+1)`, the LUT fold), so an absent,
+  * out-of-range or out-of-order s-group would silently shift codes into
+  * the wrong subspace. Both evaluation paths therefore require the i-th
+  * group to have s = i, and exactly m groups, and throw identically on a
+  * malformed codebook. Any codebook trained on a non-empty corpus and
+  * folded through `array_sort` satisfies the contract.
   */
 case class PqBestCodes(emb: Expression, cb: Expression, m: Int)
     extends BinaryExpression {
@@ -292,7 +292,11 @@ case class PqBestCodes(emb: Expression, cb: Expression, m: Int)
     while (i < nc) {
       val s0 = if (sIsLong) arr.getStruct(i, 4).getLong(0)
         else arr.getStruct(i, 4).getInt(0).toLong
-      if (s0 < 0L || s0 >= m || codes.size >= m) badCodebook(s0)
+      // the next group must be exactly the next subspace id: presence,
+      // range, ascending order and count in one comparison (the second
+      // only stops an (m+1)-th group, s0 == m, before it indexes past the
+      // embedding)
+      if (s0 != codes.size || s0 >= m) badCodebook(s0)
       // argmin within this s-group
       var bestCode = 0L
       var bestD2 = 0.0
@@ -375,7 +379,7 @@ case class PqBestCodes(emb: Expression, cb: Expression, m: Int)
          |  while ($i < $nc) {
          |    InternalRow $row = $c.getStruct($i, 4);
          |    long $s0 = ${getS(row)};
-         |    if ($s0 < 0L || $s0 >= $m || $nCodes >= $m)
+         |    if ($s0 != $nCodes || $s0 >= $m)
          |      throw graft.functions.PqBestCodes.malformed($s0, $m);
          |    long $bestCode = 0L; double $bestD2 = 0.0; double $bestDot = 0.0;
          |    boolean $have = false;
@@ -423,5 +427,5 @@ object PqBestCodes {
   def malformed(seen: Long, m: Int): IllegalArgumentException =
     new IllegalArgumentException(
       "pq_best_codes: malformed codebook — expected exactly " +
-        s"$m subspace groups with s in [0, $m), saw $seen")
+        s"$m subspace groups s = 0..${m - 1} in ascending order, saw $seen")
 }

@@ -3,32 +3,45 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
 
-/** `transformWithState` (Spark 4.x `StatefulProcessor`) forms of the two
-  * hottest keyed-state operators — txn assembly and the rolling-lag ring.
+/** The keyed-state streaming operators: one `transformWithState` (Spark
+  * 4.x `StatefulProcessor`) processor per operator, the only keyed-state
+  * API the library uses.
   *
-  * Semantics are identical to the `flatMapGroupsWithState` forms in
-  * [[Streams]] (parity-asserted in StreamingSpec); what changes is the state
-  * plumbing:
+  *   - State is NAMED and TYPED: the txn buffer is a `ListState`, so the
+  *     RocksDB state store appends an arriving event as its own entry
+  *     instead of rewriting the whole buffer every micro-batch (large
+  *     in-flight transactions under drift); the rolling-lag ring and the
+  *     commit-floor buffer are `ListState`s too, the rest hold one small
+  *     `ValueState` per key.
+  *   - Expiry that is a silent drop is a declarative `TTLConfig`. Expiry
+  *     that must EMIT or leave a tombstone (activity, growth, scd2, drift
+  *     broker, heartbeat) is a processing-time timer, one pending per key.
+  *     `ttlMs <= 0` disables expiry (bounded replays and tests).
+  *   - Each processor's semantics is a pure fold in [[Streams]]:
+  *     FoldPropertiesSpec tests the folds for
+  *     chop-invariance, StreamingSpec / EventStreamSpec run the processors
+  *     against a per-batch replay of the fold and against the batch
+  *     operators, and FailureDrillSpec kills and resumes them.
   *
-  *   - the buffer is a NAMED, TYPED `ListState` instead of one opaque
-  *     case-class blob — the RocksDB state store appends an arriving event
-  *     as its own key-value entry instead of rewriting the whole buffer
-  *     value on every micro-batch, which is the operational win at scale
-  *     (large in-flight transactions under drift);
-  *   - state TTL is declarative (`TTLConfig`) — the runtime expires
-  *     abandoned buffers per-entry, replacing the manual
-  *     `ProcessingTimeTimeout` + `setTimeoutDuration` bookkeeping (and its
-  *     zero-interval-trigger busy-loop pitfall).
-  *
-  * Requires the RocksDB state store provider
-  * (`spark.sql.streaming.stateStore.providerClass` →
-  * `...state.RocksDBStateStoreProvider`); the HDFS-backed default does not
-  * support `transformWithState`. The `flatMapGroupsWithState` forms remain
-  * the portable default.
+  * Precondition: the RocksDB state store provider
+  * (`spark.sql.streaming.stateStore.providerClass`), which
+  * [[graft.GraftSession]] sets; Spark's default HDFS-backed provider does
+  * not support `transformWithState`.
   */
 object StreamsV2 {
 
   import Streams.{AssembledTxn, Event, LagSample, LagSnapshot}
+
+  /** TTL config and time mode for an operator whose expiry is a silent
+    * drop: `ttlMs <= 0` means no expiry and no clock. */
+  private def ttlMode(ttlMs: Long): (TTLConfig, TimeMode) =
+    if (ttlMs > 0)
+      (TTLConfig(java.time.Duration.ofMillis(ttlMs)), TimeMode.ProcessingTime())
+    else (TTLConfig.NONE, TimeMode.None())
+
+  /** Time mode for an operator whose expiry is a timer. */
+  private def timerMode(ttlMs: Long): TimeMode =
+    if (ttlMs > 0) TimeMode.ProcessingTime() else TimeMode.None()
 
   /** Txn-assembly processor: buffer per txId until complete
     * (`src/changefeed/model.ts:176-205` — same completion rule as
@@ -63,18 +76,18 @@ object StreamsV2 {
     }
   }
 
-  /** Txn assembly on `transformWithState` — drop-in for
-    * [[Streams.assembleTxns]]. `ttlMs <= 0` disables expiry (bounded
-    * replays / tests). */
+  /** Txn assembly (`src/changefeed/model.ts:176-205`,
+    * `web/App.tsx:2115-2156`): buffer events per txId until
+    * `count >= total` (or a `last` marker), then emit the whole
+    * transaction, events sorted by `txIndex` (`model.ts:196`). Incomplete
+    * txns expire after `ttlMs` processing time — the safety valve the
+    * reference lacks. */
   def assembleTxns(
       events: Dataset[Event],
       ttlMs: Long = 60000L): Dataset[AssembledTxn] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val (ttl, mode) =
-      if (ttlMs > 0)
-        (TTLConfig(java.time.Duration.ofMillis(ttlMs)), TimeMode.ProcessingTime())
-      else (TTLConfig.NONE, TimeMode.None())
+    val (ttl, mode) = ttlMode(ttlMs)
     events
       .groupByKey(_.txId)
       .transformWithState(new TxnAssemblyProcessor(ttl), mode, OutputMode.Append())
@@ -110,8 +123,13 @@ object StreamsV2 {
     }
   }
 
-  /** Rolling lag percentiles on `transformWithState` — drop-in for
-    * [[Streams.lagRollingStream]]. */
+  /** Rolling lag percentiles — the live form of the reference's
+    * MetricsStore (`src/engine/metrics.ts:42-44,97-139`): a per-lane ring
+    * buffer of the LAST `lastN` lag samples, with a p50/p95/max snapshot
+    * emitted after every micro-batch — the number the dashboard shows on a
+    * long-running feed. Batch counterpart (same slice, same interpolation):
+    * `MetricsAgg.lagPercentilesRolling`. Within a batch, samples append in
+    * delivery order (ord1, ord2); state is O(lastN) per lane. */
   def lagRollingStream(
       samples: Dataset[LagSample],
       lastN: Int = 2000): Dataset[LagSnapshot] = {
@@ -123,9 +141,8 @@ object StreamsV2 {
   }
 
   /** Funnel-progress processor: per-user first-completion times as ONE
-    * small `ValueState` (≤ |steps| longs), the shared
-    * [[Streams.funnelFold]] doing the semantics — v1/v2 parity by
-    * construction, same as the throttle/broker/lag processors. */
+    * small `ValueState` (≤ |steps| longs); [[Streams.funnelFold]] is the
+    * semantics. */
   class FunnelProcessor(steps: Seq[String], ttl: TTLConfig)
       extends StatefulProcessor[Long, Streams.EventIn, Streams.FunnelAdvance] {
     @transient private var progress:
@@ -145,28 +162,27 @@ object StreamsV2 {
     }
   }
 
-  /** Ordered-conversion funnel on `transformWithState` — drop-in for
-    * [[Streams.funnelStream]] (parity-asserted in EventStreamSpec). */
+  /** Streaming ordered-conversion funnel — the incremental form of
+    * [[graft.operators.EventAnalytics.funnel]]: one [[Streams.FunnelAdvance]]
+    * per (user, stage) ever, so the downstream per-stage count is an
+    * append-only aggregate instead of a re-scan of history. Parity:
+    * EventStreamSpec; restart: FailureDrillSpec. */
   def funnelStream(
       events: Dataset[Streams.EventIn],
       steps: Seq[String] = Seq("signup", "click", "purchase"),
       ttlMs: Long = 0L): Dataset[Streams.FunnelAdvance] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val (ttl, mode) =
-      if (ttlMs > 0)
-        (TTLConfig(java.time.Duration.ofMillis(ttlMs)), TimeMode.ProcessingTime())
-      else (TTLConfig.NONE, TimeMode.None())
+    val (ttl, mode) = ttlMode(ttlMs)
     events
       .groupByKey(_.userId)
       .transformWithState(new FunnelProcessor(steps, ttl), mode, OutputMode.Append())
   }
 
   /** Transition-matrix processor: ONE previous-event tuple of
-    * `ValueState` per user — the fold is [[Streams.transitionsFold]],
-    * shared with the `flatMapGroupsWithState` form. TTL expiry clears
-    * the carried tuple (declarative `TTLConfig`, like the v1 form's
-    * plain eviction — a re-appearing user simply starts a new chain). */
+    * `ValueState` per user; the fold is [[Streams.transitionsFold]]. TTL
+    * expiry clears the carried tuple — a re-appearing user simply starts
+    * a new chain. */
   class TransitionsProcessor(ttl: TTLConfig)
       extends StatefulProcessor[Long, (Long, Long, String, Long), Streams.TransitionOut] {
     @transient private var last: org.apache.spark.sql.streaming.ValueState[Streams.LastEvent] = _
@@ -186,25 +202,25 @@ object StreamsV2 {
     }
   }
 
-  /** Streaming transition matrix on `transformWithState` — drop-in for
-    * [[Streams.transitionsStream]]. `ttlMs <= 0` disables expiry. */
+  /** Streaming transition matrix — the smallest keyed state there is: one
+    * previous-event tuple per user. Each arriving event emits its
+    * (previous → current) pair, so the matrix downstream is an append-only
+    * count per (from, to) instead of a `lead` window over all history.
+    * `events` rows are (userId, eventId, eventType, tMs). */
   def transitionsStream(
       events: Dataset[(Long, Long, String, Long)],
       ttlMs: Long = 0L): Dataset[Streams.TransitionOut] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val (ttl, mode) =
-      if (ttlMs > 0)
-        (TTLConfig(java.time.Duration.ofMillis(ttlMs)), TimeMode.ProcessingTime())
-      else (TTLConfig.NONE, TimeMode.None())
+    val (ttl, mode) = ttlMode(ttlMs)
     events
       .groupByKey(_._1)
       .transformWithState(new TransitionsProcessor(ttl), mode, OutputMode.Append())
   }
 
-  /** Retention processor: (cohortDay, emitted-day set, pending) per user
-    * — the fold is [[Streams.retentionFold]], shared with the v1 form
-    * (including the pre-signup same-day `pending` buffer). */
+  /** Retention processor: (cohortDay, emitted-day set, pending) per user;
+    * the fold is [[Streams.retentionFold]] (including the pre-signup
+    * same-day `pending` buffer). */
   class RetentionProcessor(ttl: TTLConfig)
       extends StatefulProcessor[Long, Streams.EventIn, Streams.RetentionMark] {
     @transient private var st: org.apache.spark.sql.streaming.ValueState[Streams.RetentionState] = _
@@ -223,25 +239,25 @@ object StreamsV2 {
     }
   }
 
-  /** Streaming retention triangle on `transformWithState` — drop-in for
-    * [[Streams.retentionStream]]. `ttlMs <= 0` disables expiry. */
+  /** Streaming cohort retention — the incremental form of
+    * [[graft.operators.EventAnalytics.retention]]: one
+    * [[Streams.RetentionMark]] per (user, active day) ever, so the triangle
+    * is an append-only count per (cohortDay, dayOffset). Pre-signup
+    * same-day activity is buffered, so stream == batch even when the
+    * activity row arrives before its user's signup row. */
   def retentionStream(
       events: Dataset[Streams.EventIn],
       ttlMs: Long = 0L): Dataset[Streams.RetentionMark] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val (ttl, mode) =
-      if (ttlMs > 0)
-        (TTLConfig(java.time.Duration.ofMillis(ttlMs)), TimeMode.ProcessingTime())
-      else (TTLConfig.NONE, TimeMode.None())
+    val (ttl, mode) = ttlMode(ttlMs)
     events
       .groupByKey(_.userId)
       .transformWithState(new RetentionProcessor(ttl), mode, OutputMode.Append())
   }
 
-  /** Last-touch attribution processor: ONE carried touch tuple per user
-    * — the fold is [[Streams.attributionFold]], shared with the v1
-    * form; every purchase emits already credited. */
+  /** Last-touch attribution processor: ONE carried touch tuple per user;
+    * the fold is [[Streams.attributionFold]]. */
   class AttributionProcessor(touchTypes: Set[String], ttl: TTLConfig)
       extends StatefulProcessor[Long, Streams.AttrIn, Streams.AttributionOut] {
     @transient private var touch: org.apache.spark.sql.streaming.ValueState[Streams.LastEvent] = _
@@ -261,35 +277,34 @@ object StreamsV2 {
     }
   }
 
-  /** Streaming last-touch attribution on `transformWithState` — drop-in
-    * for [[Streams.attributionStream]]. `ttlMs <= 0` disables expiry. */
+  /** Streaming last-touch attribution — the incremental form of
+    * [[graft.operators.EventAnalytics.attribution]]: every purchase emits
+    * exactly once, already credited, so the channel ledger is an
+    * append-only (count, ticks) aggregate. Money stays integer ticks end
+    * to end. */
   def attributionStream(
       events: Dataset[Streams.AttrIn],
       touchTypes: Set[String] = Set("click", "view"),
       ttlMs: Long = 0L): Dataset[Streams.AttributionOut] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val (ttl, mode) =
-      if (ttlMs > 0)
-        (TTLConfig(java.time.Duration.ofMillis(ttlMs)), TimeMode.ProcessingTime())
-      else (TTLConfig.NONE, TimeMode.None())
+    val (ttl, mode) = ttlMode(ttlMs)
     events
       .groupByKey(_.userId)
       .transformWithState(new AttributionProcessor(touchTypes, ttl), mode, OutputMode.Append())
   }
 
   /** [[Streams.ActivityState]] plus the last-touch processing time the
-    * timer-based TTL eviction needs (V2 has no `setTimeoutDuration`; a
-    * timer is registered per batch and a stale-timer guard compares
-    * against `lastTouchMs`). */
+    * timer-based eviction needs: a timer registered before a later touch
+    * is stale, and the guard compares against `lastTouchMs`. */
   case class ActivityStateV2(days: Seq[Long], everActive: Boolean,
       lastTouchMs: Long)
 
-  /** DAU / new-vs-returning processor — the `transformWithState` form of
-    * [[Streams.activityStream]], same fold ([[Streams.activityFold]]),
-    * same TTL-eviction contract: expiry drops the day SET but keeps the
-    * one-boolean `everActive` tombstone, so a re-appearing user is never
-    * a second `new`. */
+  /** DAU / new-vs-returning processor over [[Streams.activityFold]].
+    * Expiry drops the day SET but keeps the one-boolean `everActive`
+    * tombstone, so a re-appearing user is never a second `new`; DAU may
+    * overcount an evicted user's REVISITED day (its dedup evidence is
+    * gone), `new_users` never inflates. */
   class ActivityProcessor(ttlMs: Long)
       extends StatefulProcessor[Long, Streams.EventIn, Streams.DayActive] {
     @transient private var st: org.apache.spark.sql.streaming.ValueState[ActivityStateV2] = _
@@ -331,28 +346,29 @@ object StreamsV2 {
     }
   }
 
-  /** Streaming DAU on `transformWithState` — drop-in for
-    * [[Streams.activityStream]]. `ttlMs <= 0` disables expiry. */
+  /** Streaming DAU / new-vs-returning — the incremental form of
+    * [[graft.operators.EventAnalytics.newVsReturning]]: one
+    * [[Streams.DayActive]] per (user, day) ever; aggregating the emitted
+    * stream by day reproduces the batch ledger at any point in time. */
   def activityStream(
       events: Dataset[Streams.EventIn],
       ttlMs: Long = 0L): Dataset[Streams.DayActive] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val mode = if (ttlMs > 0) TimeMode.ProcessingTime() else TimeMode.None()
+    val mode = timerMode(ttlMs)
     events
       .groupByKey(_.userId)
       .transformWithState(new ActivityProcessor(ttlMs), mode, OutputMode.Append())
   }
 
-  /** [[Streams.GrowthState]] plus the last-touch processing time (same
-    * stale-timer discipline as [[ActivityStateV2]]). */
+  /** [[Streams.GrowthState]] plus the last-touch processing time (the
+    * stale-timer guard of [[ActivityStateV2]]). */
   case class GrowthStateV2(lastWeek: Long, churned: Boolean, lastTouchMs: Long)
 
-  /** Growth-accounting processor — the `transformWithState` form of
-    * [[Streams.growthStream]], same fold ([[Streams.growthFold]]), same
-    * eviction contract: expiry emits the silent `churned` row and keeps
-    * the (lastWeek, churned=true) tombstone so a return classifies
-    * `resurrected`, never a second `new`. */
+  /** Growth-accounting processor over [[Streams.growthFold]]: expiry
+    * emits the silent `churned` row and keeps the (lastWeek,
+    * churned=true) tombstone so a return classifies `resurrected`, never
+    * a second `new`. */
   class GrowthProcessor(ttlMs: Long)
       extends StatefulProcessor[Long, Streams.EventIn, Streams.GrowthMark] {
     @transient private var st: org.apache.spark.sql.streaming.ValueState[GrowthStateV2] = _
@@ -394,26 +410,35 @@ object StreamsV2 {
     }
   }
 
-  /** Streaming growth accounting on `transformWithState` — drop-in for
-    * [[Streams.growthStream]]. `ttlMs <= 0` disables expiry. */
+  /** Streaming weekly growth accounting — the incremental form of
+    * [[graft.operators.EventAnalytics.growthAccounting]]: one long of
+    * state per user (the last active week), each classification emitted
+    * the moment its evidence arrives. With `ttlMs = 0` the event-driven
+    * kinds (new / retained / resurrected + gap churn) stream exactly.
+    * Silent churn — a user who never returns — has no closing event, so
+    * it emits on expiry as `churned` at lastWeek+1. TTL trade-off (pinned
+    * in EventStreamSpec): if the TTL fires before the gap is real (the
+    * user returns in week lastWeek+1), the stream has emitted
+    * churned + resurrected where the batch ledger says `retained` — an
+    * append-only stream cannot retract an eviction-time mark; choose
+    * `ttlMs` ≫ the week cadence. */
   def growthStream(
       events: Dataset[Streams.EventIn],
       ttlMs: Long = 0L): Dataset[Streams.GrowthMark] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val mode = if (ttlMs > 0) TimeMode.ProcessingTime() else TimeMode.None()
+    val mode = timerMode(ttlMs)
     events
       .groupByKey(_.userId)
       .transformWithState(new GrowthProcessor(ttlMs), mode, OutputMode.Append())
   }
 
   /** RFM processor: one 3-long `ValueState` per purchasing user — the
-    * running (lastDay, frequency, ticks). The fold is
-    * [[Streams.rfmFold]], the SAME function the
-    * `flatMapGroupsWithState` form calls — the two APIs cannot drift.
-    * TTL here is declarative; the [[Streams.rfmStream]] docstring's
-    * eviction caveat (totals ARE the product; expiry resets a
-    * re-appearing purchaser visibly) applies identically. */
+    * running (lastDay, frequency, ticks); the fold is [[Streams.rfmFold]].
+    * The totals ARE the product, so expiry only suits users whose final
+    * mark the sink has seen: a re-appearing purchaser restarts their
+    * totals, which the latest-mark-wins consumer surfaces as a visible
+    * reset rather than silently wrong arithmetic. */
   class RfmProcessor(ttl: TTLConfig)
       extends StatefulProcessor[Long, Streams.AttrIn, Streams.RfmMark] {
     @transient private var totals: org.apache.spark.sql.streaming.ValueState[Streams.RfmState] = _
@@ -432,28 +457,28 @@ object StreamsV2 {
     }
   }
 
-  /** Streaming RFM on `transformWithState` — drop-in for
-    * [[Streams.rfmStream]]. `ttlMs <= 0` disables expiry. */
+  /** Streaming RFM — the incremental form of
+    * [[graft.operators.EventAnalytics.rfm]]: every purchase batch emits a
+    * superseding running snapshot, so the segmentation table is a
+    * latest-mark-per-user upsert plus the fixed scoring projection. Money
+    * stays integer ticks (ticks / 100 = the batch DECIMAL(18,2)
+    * monetary). */
   def rfmStream(
       events: Dataset[Streams.AttrIn],
       ttlMs: Long = 0L): Dataset[Streams.RfmMark] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val (ttl, mode) =
-      if (ttlMs > 0)
-        (TTLConfig(java.time.Duration.ofMillis(ttlMs)), TimeMode.ProcessingTime())
-      else (TTLConfig.NONE, TimeMode.None())
+    val (ttl, mode) = ttlMode(ttlMs)
     events
       .groupByKey(_.userId)
       .transformWithState(new RfmProcessor(ttl), mode, OutputMode.Append())
   }
 
   /** Cohort-LTV processor: one long of `ValueState` per user (the signup
-    * cohort day). The fold is [[Streams.ltvFold]] — shared with the
-    * `flatMapGroupsWithState` form. TTL expiry forgets a cohort, so a
-    * user's LATER purchases drop from the triangle (the conservative
-    * direction — the entry mark emitted exactly once before expiry, so
-    * cohort sizes never double-count). */
+    * cohort day); the fold is [[Streams.ltvFold]]. TTL expiry forgets a
+    * cohort, so a user's LATER purchases drop from the triangle (the
+    * conservative direction — the entry mark emitted exactly once before
+    * expiry, so cohort sizes never double-count). */
   class LtvProcessor(ttl: TTLConfig)
       extends StatefulProcessor[Long, Streams.AttrIn, Streams.LtvMark] {
     @transient private var cohort: org.apache.spark.sql.streaming.ValueState[Streams.LtvState] = _
@@ -472,28 +497,25 @@ object StreamsV2 {
     }
   }
 
-  /** Streaming cohort LTV on `transformWithState` — drop-in for
-    * [[Streams.ltvStream]]. `ttlMs <= 0` disables expiry. */
+  /** Streaming cohort LTV — the incremental form of
+    * [[graft.operators.EventAnalytics.cohortLtv]]: every purchase emits
+    * already cohort-attributed, so the LTV triangle is an append-only
+    * (cohortDay, weekOffset) aggregate instead of a re-join of all
+    * purchases against all signups. */
   def ltvStream(
       events: Dataset[Streams.AttrIn],
       ttlMs: Long = 0L): Dataset[Streams.LtvMark] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val (ttl, mode) =
-      if (ttlMs > 0)
-        (TTLConfig(java.time.Duration.ofMillis(ttlMs)), TimeMode.ProcessingTime())
-      else (TTLConfig.NONE, TimeMode.None())
+    val (ttl, mode) = ttlMode(ttlMs)
     events
       .groupByKey(_.userId)
       .transformWithState(new LtvProcessor(ttl), mode, OutputMode.Append())
   }
 
-  /** Token-bucket throttle processor: one small `ValueState` per lane —
-    * the scalar-state counterpart to the ListState buffers above (the
+  /** Token-bucket throttle processor: one small `ValueState` per lane (the
     * bucket is (tick, allowance, used); RocksDB rewrites one tiny value
-    * per lane per batch). The drain math is [[Streams.throttleFold]],
-    * the SAME function the `flatMapGroupsWithState` form calls — the two
-    * APIs cannot drift. */
+    * per lane per batch). The drain math is [[Streams.throttleFold]]. */
   class ThrottleProcessor(rate: Double, stepMs: Long, batchCap: Int, ttl: TTLConfig)
       extends StatefulProcessor[String, graft.cdc.Consumer.DeliveryIn, graft.cdc.Consumer.DeliveryOut] {
     @transient private var bucket: org.apache.spark.sql.streaming.ValueState[Streams.ThrottleState] = _
@@ -514,8 +536,12 @@ object StreamsV2 {
     }
   }
 
-  /** Consumer throttle on `transformWithState` — drop-in for
-    * [[Streams.throttleStream]]. `ttlMs <= 0` disables expiry. */
+  /** Streaming consumer throttle — the unbounded form of
+    * `Consumer.throttleDrain` (`web/App.tsx:2106-2113,2185-2201`): the
+    * per-lane token bucket carries across micro-batches, so a lane's drain
+    * schedule is identical no matter how the stream is chopped. Within a
+    * batch, events drain in (availableAt, seq) order — the order the batch
+    * fold consumes. */
   def throttleStream(
       events: Dataset[graft.cdc.Consumer.DeliveryIn],
       rate: Double,
@@ -524,10 +550,7 @@ object StreamsV2 {
       ttlMs: Long = 0L): Dataset[graft.cdc.Consumer.DeliveryOut] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val (ttl, mode) =
-      if (ttlMs > 0)
-        (TTLConfig(java.time.Duration.ofMillis(ttlMs)), TimeMode.ProcessingTime())
-      else (TTLConfig.NONE, TimeMode.None())
+    val (ttl, mode) = ttlMode(ttlMs)
     events
       .groupByKey(_.method)
       .transformWithState(
@@ -535,10 +558,8 @@ object StreamsV2 {
   }
 
   /** As-of enrichment processor: the latest build row per key in one
-    * `ValueState` — the minimal-state operator of the family (one (ts, id)
-    * pair per key, rewritten only when a newer build arrives). The in-batch
-    * fold is [[Streams.asOfFold]], the SAME function the
-    * `flatMapGroupsWithState` form calls — the two APIs cannot drift. */
+    * `ValueState` (one (ts, id) pair per key, rewritten only when a newer
+    * build arrives); the in-batch fold is [[Streams.asOfFold]]. */
   class AsOfProcessor(ttl: TTLConfig)
       extends StatefulProcessor[Long, Streams.AsOfIn, Streams.AsOfOut] {
     @transient private var latest: org.apache.spark.sql.streaming.ValueState[Streams.AsOfState] = _
@@ -557,26 +578,29 @@ object StreamsV2 {
     }
   }
 
-  /** Streaming as-of enrichment on `transformWithState` — drop-in for
-    * [[Streams.asOfStream]]. `ttlMs <= 0` disables expiry. */
+  /** Streaming form of [[graft.operators.AsOfJoin]]: enrich a probe stream
+    * with the latest at-or-before build row per key, both sides arriving on
+    * ONE tagged stream (union the two feeds upstream — the same trick as the
+    * batch form, which makes batch↔streaming parity exact). Within a
+    * micro-batch, rows fold in (ts, tag) order with builds first on ties;
+    * across batches the latest build per key rides in state. The one
+    * difference from batch, inherent to streaming: a build row arriving in
+    * a LATER batch than a probe with a larger ts cannot retro-enrich it
+    * (the probe already emitted) — bound skew with a watermark upstream if
+    * the feeds can interleave across batches. */
   def asOfStream(
       rows: Dataset[Streams.AsOfIn],
       ttlMs: Long = 3600000L): Dataset[Streams.AsOfOut] = {
     val spark = rows.sparkSession
     import spark.implicits._
-    val (ttl, mode) =
-      if (ttlMs > 0)
-        (TTLConfig(java.time.Duration.ofMillis(ttlMs)), TimeMode.ProcessingTime())
-      else (TTLConfig.NONE, TimeMode.None())
+    val (ttl, mode) = ttlMode(ttlMs)
     rows
       .groupByKey(_.key)
       .transformWithState(new AsOfProcessor(ttl), mode, OutputMode.Append())
   }
 
   /** FIFO broker-delivery processor: one (tick, used) `ValueState` per
-    * partition. The drain math is [[Streams.brokerFold]], the SAME
-    * function the `flatMapGroupsWithState` form calls — the two APIs
-    * cannot drift. */
+    * partition; the drain math is [[Streams.brokerFold]]. */
   class BrokerDeliveryProcessor(tickMs: Long, maxApplyPerTick: Int)
       extends StatefulProcessor[Int, graft.cdc.Consumer.BrokerIn, graft.cdc.Consumer.BrokerOut] {
     @transient private var queue: org.apache.spark.sql.streaming.ValueState[Streams.BrokerQueueState] = _
@@ -595,8 +619,12 @@ object StreamsV2 {
     }
   }
 
-  /** Exact FIFO broker delivery on `transformWithState` — drop-in for
-    * [[Streams.brokerDeliverStream]]. */
+  /** Streaming exact broker delivery — the unbounded form of
+    * `Consumer.brokerDeliverExact` (`model.ts:246-263` `pollBroker`): per
+    * partition, per-tick caps and head-of-line FIFO order carry across
+    * micro-batches. Within a batch, events process in enqueue (lsn) order;
+    * exactly-once FIFO requires lsn-ordered arrival per partition (the
+    * broker's own guarantee). */
   def brokerDeliverStream(
       events: Dataset[graft.cdc.Consumer.BrokerIn],
       tickMs: Long = 50L,
@@ -614,13 +642,12 @@ object StreamsV2 {
     * purpose: the stack mutates at its HEAD (every arrival prepends, every
     * drain pops), so the append-only ListState write pattern buys nothing
     * here — the value rewrite is the honest cost of LIFO state. The fold
-    * is [[Streams.driftFold]], the SAME function the
-    * `flatMapGroupsWithState` form calls — the two APIs cannot drift.
+    * is [[Streams.driftFold]].
     *
     * `ttlMs > 0` arms a processing-time timer re-registered on every
-    * batch; if it fires with no new arrivals the stack drains to empty
-    * (same terminal semantics as v1's ProcessingTimeTimeout). Bounded
-    * replays use a flush sentinel instead, so no wall clock enters tests. */
+    * batch; if it fires with no new arrivals the stack drains to empty.
+    * Bounded replays use a flush sentinel instead, so no wall clock enters
+    * tests. */
   class DriftBrokerProcessor(tickMs: Long, maxApplyPerTick: Int, ttlMs: Long)
       extends StatefulProcessor[Int, graft.cdc.Consumer.DriftIn, graft.cdc.Consumer.BrokerOut] {
     @transient private var queue: org.apache.spark.sql.streaming.ValueState[Streams.DriftQueueState] = _
@@ -654,8 +681,9 @@ object StreamsV2 {
     }
   }
 
-  /** Exact drift-on (LIFO) broker delivery on `transformWithState` —
-    * drop-in for [[Streams.brokerDeliverDriftStream]]. */
+  /** Streaming exact drift-on (LIFO) broker delivery — the unbounded form
+    * of `Consumer.brokerDeliverDriftExact`; [[Streams.driftFold]] states
+    * why it is exact under arbitrary micro-batch boundaries. */
   def brokerDeliverDriftStream(
       events: Dataset[graft.cdc.Consumer.DriftIn],
       tickMs: Long = 50L,
@@ -663,7 +691,7 @@ object StreamsV2 {
       ttlMs: Long = 0L): Dataset[graft.cdc.Consumer.BrokerOut] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val mode = if (ttlMs > 0) TimeMode.ProcessingTime() else TimeMode.None()
+    val mode = timerMode(ttlMs)
     events
       .groupByKey(_.part)
       .transformWithState(
@@ -671,9 +699,7 @@ object StreamsV2 {
   }
 
   /** Schema-capture processor: the per-table monotone version counter in
-    * one tiny `ValueState`. The versioning is [[Streams.schemaFold]], the
-    * SAME function the `flatMapGroupsWithState` form calls — the two APIs
-    * cannot drift. */
+    * one tiny `ValueState`; the versioning is [[Streams.schemaFold]]. */
   class SchemaCaptureProcessor
       extends StatefulProcessor[String, graft.cdc.SchemaEvolution.SchemaChange, Streams.VersionedSchemaChange] {
     @transient private var version: org.apache.spark.sql.streaming.ValueState[Streams.SchemaVersionState] = _
@@ -692,8 +718,13 @@ object StreamsV2 {
     }
   }
 
-  /** Streaming schema-change capture on `transformWithState` — drop-in
-    * for [[Streams.schemaCaptureStream]]. */
+  /** Streaming schema-change capture: the unbounded form of
+    * `SchemaEvolution.capture` — a per-table monotone version counter
+    * (`bumpSchemaVersion`, `src/modes/logBased.ts:210-217`; destination max
+    * rule `storage.ts:144-146`) carried across micro-batches. Per-lane
+    * emission timing is a stateless projection on top
+    * (`SchemaEvolution.captureLanes`' lane explode works unchanged on a
+    * streaming frame). */
   def schemaCaptureStream(
       changes: Dataset[graft.cdc.SchemaEvolution.SchemaChange]): Dataset[Streams.VersionedSchemaChange] = {
     val spark = changes.sparkSession
@@ -703,128 +734,16 @@ object StreamsV2 {
       .transformWithState(new SchemaCaptureProcessor, TimeMode.None(), OutputMode.Append())
   }
 
-  /** Latest row image within one open poll window (public for the state
-    * encoder). */
-  case class PollWinState(
-      opCode: String, valV: Option[Double], kV: Option[Long], lsn: Long, n: Long)
-
-  /** One closed poll window's emission — same fields as
-    * [[Streams.pollStream]]'s row with `poll_ts` as epoch millis. */
-  case class PollOut(
-      tbl: String, pk: String, pollTs: Long, opCode: String,
-      afterVal: Option[Double], afterK: Option[Long], opsInWindow: Long)
-
-  /** Polling-capture processor — the ROW-IMAGE form of the poll lane: per
-    * (tbl, pk) key a `MapState` holds the latest image (max-lsn op, merged
-    * payload fields, op count) of each OPEN tumbling window, and an
-    * event-time timer at each window's end emits the image once the
-    * watermark closes it — the poll's lossy-by-design semantics
-    * (intermediate versions die inside the window state;
-    * `sim/engines/PollingEngine.ts:59-84`).
+  /** SCD2 processor — the heaviest per-key state of the keyed family: the
+    * OPEN dimension version plus the version counter. The step is
+    * [[Streams.scd2Fold]].
     *
-    * vs the v1 windowed `max_by` aggregation ([[Streams.pollStream]]):
-    * same semantics (parity-asserted), but the state is explicit — one
-    * map entry per key per open window, O(1) per entry regardless of ops
-    * per window — and the RocksDB write pattern is per-window-entry
-    * updates instead of aggregation buffers. */
-  class PollProcessor(pollIntervalMs: Long)
-      extends StatefulProcessor[(String, String), Event, PollOut] {
-    @transient private var windows: org.apache.spark.sql.streaming.MapState[Long, PollWinState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      windows = getHandle.getMapState(
-        "openWindows", Encoders.scalaLong, Encoders.product[PollWinState], TTLConfig.NONE)
-
-    override def handleInputRows(
-        key: (String, String), rows: Iterator[Event],
-        timerValues: TimerValues): Iterator[PollOut] = {
-      val wm = timerValues.getCurrentWatermarkInMs()
-      rows.toSeq.sortBy(_.lsn).foreach { e =>
-        val ws = Math.floorDiv(e.commitTs, pollIntervalMs) * pollIntervalMs
-        // late-row guard, matching the v1 windowed aggregation's watermark
-        // filter: a row for a window the watermark already closed must NOT
-        // reopen it (it would emit a duplicate window on the next timer)
-        if (ws + pollIntervalMs > wm) {
-          val cur = if (windows.containsKey(ws)) Some(windows.getValue(ws)) else None
-          val next = cur match {
-            case None => PollWinState(e.opCode, e.valV, e.kV, e.lsn, 1L)
-            case Some(c) =>
-              if (e.lsn >= c.lsn) PollWinState(e.opCode, e.valV, e.kV, e.lsn, c.n + 1)
-              else c.copy(n = c.n + 1)
-          }
-          windows.updateValue(ws, next)
-          getHandle.registerTimer(ws + pollIntervalMs)
-        }
-      }
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(
-        key: (String, String), timerValues: TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[PollOut] = {
-      // a timer at windowEnd fires once the watermark passes it; emit and
-      // drop every window closed by the current watermark (covers several
-      // windows if the watermark jumped)
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val closed = windows.iterator()
-        .filter { case (ws, _) => ws + pollIntervalMs <= wm }
-        .toSeq.sortBy(_._1)
-      // mutate state eagerly, BEFORE the runtime consumes the returned
-      // iterator — removal inside a lazy map would couple state changes to
-      // output consumption order (partial consumption on error/stop could
-      // leave emitted-but-unremoved windows)
-      val out = closed.map { case (ws, st) =>
-        windows.removeKey(ws)
-        PollOut(key._1, key._2, ws + pollIntervalMs, st.opCode, st.valV, st.kV, st.n)
-      }
-      out.iterator
-    }
-  }
-
-  /** Streaming polling capture on `transformWithState` — the keyed
-    * row-image-state counterpart of [[Streams.pollStream]] (same emitted
-    * rows, `poll_ts` as epoch ms; parity in StreamingSpec).
-    *
-    * Late-data semantics, precisely: `transformWithState` filters input
-    * rows by EVENT TIME against the watermark (a row older than the
-    * watermark never reaches the processor), while the v1 windowed
-    * aggregation filters by WINDOW END (a late row still joins its
-    * window while the window is open). The two coincide whenever
-    * `watermarkDelay` bounds the feed's actual disorder — the contract a
-    * watermark is supposed to encode; under disorder EXCEEDING the
-    * stated delay, v1 may still absorb a late row into an open window
-    * where this form has already dropped it. Size the delay honestly and
-    * the forms are row-identical (randomized parity in StreamingSpec). */
-  def pollStream(
-      events: Dataset[Event],
-      pollIntervalMs: Long = 1000L,
-      watermarkDelay: String = "10 seconds"): Dataset[PollOut] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, timestamp_millis}
-    events
-      .withColumn("event_time", timestamp_millis(col("commitTs")))
-      .withWatermark("event_time", watermarkDelay)
-      .as[Event]
-      .groupByKey(e => (e.tbl, e.pk))
-      .transformWithState(
-        new PollProcessor(pollIntervalMs), TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  /** SCD2 processor — the `transformWithState` form of
-    * [[Streams.scd2Stream]] (the heaviest per-key state of the keyed
-    * family: the OPEN dimension version plus the version counter). The
-    * step is [[Streams.scd2Fold]], the SAME function the
-    * `flatMapGroupsWithState` form calls — the two APIs cannot drift.
-    *
-    * TTL contract matches v1 exactly: eviction emits the OPEN version
-    * with [[Streams.ScdEvictedOpen]] as its `validTo` (a silently dropped
-    * open row would be a dimension history that never ends) and then
-    * REMOVES the state entirely — a re-appearing key restarts its version
-    * counter at 1, the v1 `state.remove()` semantics. One pending timer
-    * per key (delete-before-register, the DriftBrokerProcessor
-    * discipline), slid on every batch, so the timer fires only after a
-    * full TTL of silence. */
+    * Expiry emits the OPEN version with [[Streams.ScdEvictedOpen]] as its
+    * `validTo` (a silently dropped open row would be a dimension history
+    * that never ends) and then REMOVES the state entirely — a re-appearing
+    * key restarts its version counter at 1. One pending timer per key
+    * (delete-before-register, the DriftBrokerProcessor discipline), slid on
+    * every batch, so the timer fires only after a full TTL of silence. */
   class Scd2Processor(ttlMs: Long)
       extends StatefulProcessor[(String, String), Streams.ScdIn, Streams.ScdOut] {
     @transient private var st: org.apache.spark.sql.streaming.ValueState[Streams.ScdState] = _
@@ -862,25 +781,27 @@ object StreamsV2 {
     }
   }
 
-  /** Streaming SCD Type-2 dimension builder on `transformWithState` —
-    * drop-in for [[Streams.scd2Stream]]. `ttlMs <= 0` disables expiry. */
+  /** Streaming SCD Type-2 dimension builder — the incremental form of
+    * [[graft.cdc.ApplyEngine.scd2]]: each arriving op emits the version it
+    * closes (exactly once, in Append mode) and a non-delete opens the next.
+    * The emitted feed equals the batch history's `is_current = false` rows
+    * at any point — the open (current) versions live only in state. A
+    * warehouse consuming this feed appends closed versions and maintains
+    * current rows from [[applyStream]], so the dimension needs no rebuild
+    * scan. */
   def scd2Stream(
       ops: Dataset[Streams.ScdIn],
       ttlMs: Long = 0L): Dataset[Streams.ScdOut] = {
     val spark = ops.sparkSession
     import spark.implicits._
-    val mode = if (ttlMs > 0) TimeMode.ProcessingTime() else TimeMode.None()
+    val mode = timerMode(ttlMs)
     ops
       .groupByKey(o => (o.tbl, o.pk))
       .transformWithState(new Scd2Processor(ttlMs), mode, OutputMode.Append())
   }
 
-  /** Heartbeat processor — the `transformWithState` form of
-    * [[Streams.heartbeatStream]]: one (lsn, t) tuple per table, the
-    * smallest keyed state in the repo. The step is
-    * [[Streams.heartbeatFold]], shared with the v1 form. TTL removes the
-    * tuple silently (v1 semantics — a table going quiet is itself a gap
-    * the NEXT tick will report against whatever state remains). */
+  /** Heartbeat processor: one (lsn, t) tuple per table; the step is
+    * [[Streams.heartbeatFold]]. Expiry removes the tuple silently. */
   class HeartbeatProcessor(stallMs: Long, ttlMs: Long)
       extends StatefulProcessor[String, Streams.OpTick, Streams.StallOut] {
     @transient private var last: org.apache.spark.sql.streaming.ValueState[Streams.TickState] = _
@@ -910,25 +831,25 @@ object StreamsV2 {
     }
   }
 
-  /** Streaming liveness monitor on `transformWithState` — drop-in for
-    * [[Streams.heartbeatStream]]. `ttlMs <= 0` disables expiry. */
+  /** Streaming liveness monitor — the incremental form of
+    * [[graft.cdc.Capture.heartbeatGaps]]' stall count: a
+    * [[Streams.StallOut]] emitted exactly once per above-threshold gap, the
+    * moment its closing tick arrives, so `count by tbl` over the emitted
+    * stream equals the batch ledger's `n_stalls` at any point. */
   def heartbeatStream(
       ticks: Dataset[Streams.OpTick],
       stallMs: Long = 60000L,
       ttlMs: Long = 0L): Dataset[Streams.StallOut] = {
     val spark = ticks.sparkSession
     import spark.implicits._
-    val mode = if (ttlMs > 0) TimeMode.ProcessingTime() else TimeMode.None()
+    val mode = timerMode(ttlMs)
     ticks
       .groupByKey(_.tbl)
       .transformWithState(new HeartbeatProcessor(stallMs, ttlMs), mode, OutputMode.Append())
   }
 
-  /** Budget-admission processor — the `transformWithState` form of
-    * [[Streams.budgetAdmissionStream]]: one long (tokens consumed) per
-    * source, declarative TTL (the v1 timeout just removes the counter, so
-    * TTLConfig expresses it exactly — no timer needed). The step is
-    * [[Streams.budgetFold]], shared with the v1 form. */
+  /** Budget-admission processor: one long (tokens consumed) per source,
+    * declarative TTL; the step is [[Streams.budgetFold]]. */
   class BudgetProcessor(budgetPerSource: Long, ttl: TTLConfig)
       extends StatefulProcessor[String, Streams.BudgetIn, Streams.BudgetOut] {
     @transient private var used: org.apache.spark.sql.streaming.ValueState[Long] = _
@@ -946,31 +867,29 @@ object StreamsV2 {
     }
   }
 
-  /** Streaming per-source token-budget admission on `transformWithState` —
-    * drop-in for [[Streams.budgetAdmissionStream]]. `ttlMs <= 0` disables
-    * expiry. */
+  /** Streaming per-source token-budget admission — the ingest-time quota
+    * gate: one counter per source carried across micro-batches, so a
+    * runaway feed is cut off at write time without global coordination.
+    * Keyed by source, so it shards; a strict GLOBAL budget would serialize
+    * the world through one key, so the curation-time global cut stays a
+    * batch job ([[graft.llm.Corpus.tokenBudget]]). */
   def budgetAdmissionStream(
       rows: Dataset[Streams.BudgetIn],
       budgetPerSource: Long = 2000L,
       ttlMs: Long = 3600000L): Dataset[Streams.BudgetOut] = {
     val spark = rows.sparkSession
     import spark.implicits._
-    val (ttl, mode) =
-      if (ttlMs > 0)
-        (TTLConfig(java.time.Duration.ofMillis(ttlMs)), TimeMode.ProcessingTime())
-      else (TTLConfig.NONE, TimeMode.None())
+    val (ttl, mode) = ttlMode(ttlMs)
     rows
       .groupByKey(_.source)
       .transformWithState(new BudgetProcessor(budgetPerSource, ttl), mode, OutputMode.Append())
   }
 
-  /** Row-apply processor — the `transformWithState` form of
-    * [[Streams.applyStream]] (merge-upsert keyed by (tbl, pk)): one
-    * `ValueState[RowState]` per live key, the step is
-    * [[Streams.applyFold]] — the SAME function the v1 form calls, so the
-    * two APIs cannot drift. Delete emits the tombstone and CLEARS the
-    * state (v1's `state.remove()`); TTL is declarative — expiry of an
-    * idle key's state is a silent drop in both forms. */
+  /** Row-apply processor (merge-upsert keyed by (tbl, pk)): one
+    * `ValueState[RowState]` per live key; the step is
+    * [[Streams.applyFold]]. Delete emits the tombstone and CLEARS the
+    * state; TTL is declarative — expiry of an idle key's state is a silent
+    * drop. */
   class ApplyProcessor(ttl: TTLConfig)
       extends StatefulProcessor[(String, String), Event, Streams.RowState] {
     @transient private var row: org.apache.spark.sql.streaming.ValueState[Streams.RowState] = _
@@ -989,131 +908,95 @@ object StreamsV2 {
     }
   }
 
-  /** Streaming merge-upsert apply on `transformWithState` — drop-in for
-    * [[Streams.applyStream]]. `ttlMs <= 0` disables expiry. */
+  /** Streaming merge-upsert apply keyed by (tbl, pk) — the unbounded form
+    * of `ApplyEngine.applyState`: delete clears, partial payloads merge
+    * (`src/domain/storage.ts:137-164`). Emits the post-image after each
+    * micro-batch's events for the key (in lsn order within the batch);
+    * deleted keys emit a `deleted = true` tombstone and drop their
+    * state. */
   def applyStream(
       events: Dataset[Event],
       ttlMs: Long = 3600000L): Dataset[Streams.RowState] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val (ttl, mode) =
-      if (ttlMs > 0)
-        (TTLConfig(java.time.Duration.ofMillis(ttlMs)), TimeMode.ProcessingTime())
-      else (TTLConfig.NONE, TimeMode.None())
+    val (ttl, mode) = ttlMode(ttlMs)
     events
       .groupByKey(e => (e.tbl, e.pk))
       .transformWithState(new ApplyProcessor(ttl), mode, OutputMode.Append())
   }
 
-  /** One OPEN gap session: `[start, end)` with `end = last event time +
-    * gap` (the `session_window` convention — two events share a session
-    * iff the later one's time is STRICTLY before the earlier one's end).
-    * `n` counts the session's events. */
-  case class OpenSession(start: Long, end: Long, n: Long)
-
-  /** A closed session — same fields as [[Streams.sessionStream]]'s row
-    * (`session_end` already includes the gap, the `session_window`
-    * convention). */
-  case class SessionOut(
-      userId: Long, sessionStart: Long, sessionEnd: Long, nEvents: Long)
-
-  /** One session-merge step: fold a batch of same-user event times into
-    * the open-session list. Pure interval merge — each event is a
-    * `[t, t+gap)` candidate, sessions merge while the next start is
-    * strictly before the current end (Spark's `session_window` rule, so
-    * this form, the v1 native-aggregate form, and the batch
-    * [[graft.operators.Sessions.sessionize]] agree event-for-event).
-    * Order-insensitive within a batch (the sort owns the order), and a
-    * late-but-within-watermark event can BRIDGE two open sessions — the
-    * case the list state exists for. */
-  def sessionFold(
-      gapMs: Long,
-      open: Seq[OpenSession],
-      arrivalTs: Seq[Long]): Seq[OpenSession] = {
-    val all = (open ++ arrivalTs.map(t => OpenSession(t, t + gapMs, 1L)))
-      .sortBy(s => (s.start, s.end))
-    val out = scala.collection.mutable.ArrayBuffer.empty[OpenSession]
-    all.foreach { s =>
-      if (out.nonEmpty && s.start < out.last.end) {
-        val l = out.last
-        out(out.size - 1) = OpenSession(l.start, math.max(l.end, s.end), l.n + s.n)
-      } else out += s
-    }
-    out.toSeq
-  }
-
-  /** Gap-sessionization processor — the keyed-state form of
-    * [[Streams.sessionStream]] (which rides the native `session_window`
-    * aggregate): per user a `ListState` of OPEN sessions, merged against
-    * each batch's arrivals by [[sessionFold]] and closed by event-time
-    * timers once the watermark passes a session's end. The state is
-    * list-shaped on purpose: out-of-order events within the watermark
-    * allowance can hold several sessions open per user at once (and a
-    * late event can merge two of them), which is exactly what
-    * `UpdatingSessionsExec` tracks internally — here it is explicit,
-    * per-entry in RocksDB, instead of inside an aggregation buffer.
-    *
-    * Emission contract matches v1 append mode: a (user, session) row
-    * emits ONCE, when the watermark passes `session end` (= last event
-    * time + gap). Input rows older than the watermark are dropped by the
-    * runtime before reaching the processor — the same honest-delay caveat
-    * as [[PollProcessor]], plus one boundary: `transformWithState`
-    * filters late rows as `eventTime <= watermark` and the watermark
-    * STARTS at 0, so a row at event time 0 is dropped before the first
-    * batch ever runs (the v1 aggregate keeps it — its filter is on window
-    * END). Event times must be positive, which every epoch-ms feed
-    * satisfies. */
-  class SessionProcessor(gapMs: Long)
-      extends StatefulProcessor[Long, Streams.EventIn, SessionOut] {
-    @transient private var open: ListState[OpenSession] = _
+  /** Commit-floor processor: per txId a `ListState` buffer plus one
+    * event-time timer at the transaction's release point. */
+  class CommitFloorProcessor
+      extends StatefulProcessor[String, Event, AssembledTxn] {
+    @transient private var buf: ListState[Event] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      open = getHandle.getListState(
-        "openSessions", Encoders.product[OpenSession], TTLConfig.NONE)
+      buf = getHandle.getListState("floorBuf", Encoders.product[Event], TTLConfig.NONE)
+
+    private def assembled(txId: String, all: List[Event]): AssembledTxn = {
+      val sorted = all.sortBy(e => (e.txIndex, e.lsn))
+      AssembledTxn(txId, sorted.size, sorted.map(_.commitTs).max,
+        sorted.map(_.lsn).min, sorted)
+    }
 
     override def handleInputRows(
-        userId: Long, rows: Iterator[Streams.EventIn],
-        timerValues: TimerValues): Iterator[SessionOut] = {
-      val merged = sessionFold(gapMs, open.get().toSeq, rows.map(_.tMs).toSeq)
+        txId: String, rows: Iterator[Event],
+        timerValues: TimerValues): Iterator[AssembledTxn] = {
+      val incoming = rows.toList
+      val all = buf.get().toList ++ incoming
+      val commitTs = all.map(_.commitTs).max
       val wm = timerValues.getCurrentWatermarkInMs()
-      val (closed, stillOpen) = merged.partition(_.end <= wm)
-      if (stillOpen.isEmpty) open.clear() else open.put(stillOpen.toArray)
       getHandle.listTimers().foreach(getHandle.deleteTimer)
-      if (stillOpen.nonEmpty) getHandle.registerTimer(stillOpen.map(_.end).min)
-      closed.sortBy(_.start)
-        .map(s => SessionOut(userId, s.start, s.end, s.n)).iterator
+      if (Streams.txnComplete(all) && wm >= commitTs) {
+        buf.clear()
+        Iterator.single(assembled(txId, all))
+      } else {
+        buf.appendList(incoming.toArray)
+        // hold until the floor (watermark) passes the commit; a timer
+        // fires once the watermark REACHES it, hence the +1
+        getHandle.registerTimer(math.max(commitTs, wm + 1) + 1)
+        Iterator.empty
+      }
     }
 
     override def handleExpiredTimer(
-        userId: Long, timerValues: TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[SessionOut] = {
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val (closed, stillOpen) = open.get().toSeq.partition(_.end <= wm)
-      if (stillOpen.isEmpty) open.clear() else open.put(stillOpen.toArray)
-      // the fired timer is consumed by the runtime; one-timer discipline
-      // means no stale ones remain — just arm the next deadline
-      if (stillOpen.nonEmpty) getHandle.registerTimer(stillOpen.map(_.end).min)
-      closed.sortBy(_.start)
-        .map(s => SessionOut(userId, s.start, s.end, s.n)).iterator
+        txId: String, timerValues: TimerValues,
+        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo)
+        : Iterator[AssembledTxn] = {
+      val all = buf.get().toList
+      buf.clear()
+      if (Streams.txnComplete(all)) Iterator.single(assembled(txId, all))
+      else Iterator.empty
     }
   }
 
-  /** Streaming gap sessionization on `transformWithState` — emits the
-    * same closed-session rows as [[Streams.sessionStream]] (as a typed
-    * Dataset; parity in EventStreamSpec). */
-  def sessionStream(
-      events: Dataset[Streams.EventIn],
-      gapMs: Long = 28800000L,
-      watermarkDelayMs: Long = 0L): Dataset[SessionOut] = {
+  /** Apply-on-commit with the commit floor as an event-time watermark
+    * (`src/changefeed/model.ts:169-244`, SURVEY §2.9: the floor — min
+    * commitTs over in-flight events — IS the watermark). Transactions
+    * assemble per txId; a *complete* transaction is held in state until the
+    * watermark passes its commitTs (drifted stragglers keep the watermark —
+    * and therefore every commit-later txn — back), then emits. Incomplete
+    * txns are dropped as soon as the watermark passes their max buffered
+    * commitTs — no extra lateness beyond `watermarkDelay` is granted (the
+    * txn's timer fires once the watermark passes
+    * `max(commitTs, watermark + 1)`).
+    *
+    * Note: `txnComplete` counts duplicate deliveries toward `total`
+    * (reference-faithful, `model.ts:178-186`), so at-least-once sources must
+    * run [[Streams.dedupOffsets]] upstream of assembly.
+    */
+  def applyOnCommitStream(
+      events: Dataset[Event],
+      watermarkDelay: String = "10 seconds"): Dataset[AssembledTxn] = {
     val spark = events.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, timestamp_millis}
     events
-      .withColumn("event_time", timestamp_millis(col("tMs")))
-      .withWatermark("event_time", s"$watermarkDelayMs milliseconds")
-      .as[Streams.EventIn]
-      .groupByKey(_.userId)
-      .transformWithState(
-        new SessionProcessor(gapMs), TimeMode.EventTime(), OutputMode.Append())
+      .withColumn("event_time", timestamp_millis(col("commitTs")))
+      .withWatermark("event_time", watermarkDelay)
+      .as[Event]
+      .groupByKey(_.txId)
+      .transformWithState(new CommitFloorProcessor, TimeMode.EventTime(), OutputMode.Append())
   }
 }

@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
@@ -28,4 +29,10 @@ object GraftBridge {
       new ExpressionInfo("graft.functions", name),
       builder)
   }
+
+  /** Block until every listener-bus queue has delivered its pending events
+    * (listeners run on the bus threads, so a reader that does not wait can
+    * miss the tail of the last execution). */
+  def drainListenerBus(sc: SparkContext, timeoutMs: Long = 60000L): Unit =
+    sc.listenerBus.waitUntilEmpty(timeoutMs)
 }

@@ -82,6 +82,27 @@ class CanonicalSpec extends SparkSpec {
     assert(h1 === h2)
   }
 
+  test("stableJson: wide rows compile under strict codegen; text equals the struct form") {
+    // the struct form inlines coerceComparable per column: at 16 columns
+    // its generated method passes 64 KB, which strict codegen refuses
+    val names = (0 until 16).map(i => f"c$i%02d")
+    val wide = spark.range(3).select(names.zipWithIndex.map { case (n, i) =>
+      (i % 3 match {
+        case 0 => col("id") * 1.5
+        case 1 => concat(lit(" v\"q "), col("id").cast("string"))
+        case _ => when(col("id") > 0, col("id")).cast("long")
+      }).as(n)
+    }: _*)
+    val json = wide.select(Canonical.stableJson(wide, names)).as[String].collect()
+    assert(json.head.startsWith("""{"c00":"0","c01":"v\"q 0","c03":"0""""), json.head)
+    // on a frame narrow enough for the struct form, the texts match
+    val narrow = wide.select(names.take(3).map(col): _*)
+    val structForm = narrow.select(to_json(struct(names.take(3).sorted.map(n =>
+      Canonical.coerceComparable(col(n)).as(n)): _*))).as[String].collect().toSeq
+    assert(narrow.select(Canonical.stableJson(narrow, names.take(3))).as[String]
+      .collect().toSeq === structForm)
+  }
+
   test("inferColumnType follows the reference rules") {
     val df = Seq(
       ("flag", "true"), ("updated_ts", "1700000000"), ("amount", "12.5"), ("name", "ada")

@@ -141,6 +141,31 @@ class Hash31Spec extends SparkSpec {
     }
   }
 
+  test("pqBestCodes: a complete but non-ascending codebook is rejected by both paths") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    // both s-groups present, but s=1 first: positional consumers
+    // (element_at(codes, s+1)) would read each code in the wrong subspace
+    val permuted = typedLit(Seq((1, 0L, Seq(0.0, 1.0), 1.0), (0, 0L, Seq(1.0, 0.0), 1.0)))
+    def contractError(run: => Any): Unit = {
+      val ex = intercept[Exception](run)
+      def chain(t: Throwable): Seq[String] =
+        if (t == null) Nil else t.getMessage +: chain(t.getCause)
+      assert(chain(ex).exists(m => m != null && m.contains("ascending order")),
+        s"must throw the pq_best_codes contract error, got $ex")
+    }
+    // codegen: the session's strict codegen compiles the projection
+    val df = Seq(Seq(1.0f, 2.0f, 3.0f, 4.0f)).toDF("embedding")
+    contractError(df.select(
+      GraftFunctions.pqBestCodes(col("embedding"), permuted, 2).as("bc")).collect())
+    // interpreted: nullSafeEval on the same inputs, as Catalyst literals
+    val emb = Literal.create(Seq(1.0f, 2.0f, 3.0f, 4.0f), ArrayType(FloatType))
+    val cb = df.select(permuted).queryExecution.analyzed.expressions
+      .flatMap(_.collect { case l: Literal => l }).head
+    contractError(graft.functions.PqBestCodes(emb, cb, 2).eval())
+  }
+
   test("pqBestCodes/nearestCentroid reject integral element types at analysis time") {
     import spark.implicits._
     val intEmb = Seq(Seq(1, 2, 3, 4)).toDF("embedding")

@@ -12,17 +12,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** The shipped session config ([[GraftSession]]) at `local[4]`: tests
+    * pin the plans and run the streams the bench runs. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Spark 4.1's async checkpoint-file checksums deadlock in this
-      // sandbox (awaitResult never completes when committing state deltas)
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.create(4, "graft-test")
     s.sparkContext.setLogLevel("ERROR")
     s
   }

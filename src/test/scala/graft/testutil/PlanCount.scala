@@ -5,11 +5,7 @@ package graft.testutil
 object PlanCount {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.create(4, "graft-plan-count")
     spark.sparkContext.setLogLevel("ERROR")
     for (n <- args.drop(1)) {
       val p = graft.SparkEntry.queries(n)(spark, sf)
